@@ -1,8 +1,7 @@
 #!/bin/bash
 # One gate-clean Bench chunk at an arbitrary leg: fresh JVM, sized
 # shuffle partitions (graft.util.Tuning reads the leg), exact-name row
-# list from a file. Generalizes run_sf100_chunk.sh (kept for the
-# recorded sf100 campaign invocations).
+# list from a file.
 # Usage: run_chunk.sh <sf-dir> <list-file> <out-json> [skip-names]
 set -u
 SFDIR="$1"

@@ -351,15 +351,7 @@ object Bench {
     val shufflePartitions = graft.util.Tuning.shufflePartitions(sfDir, cpus.toInt)
     System.err.println(s"[bench] shuffle partitions: $shufflePartitions " +
       s"(leg ${graft.util.Tuning.legBytes(sfDir) >> 20} MB, cpus $cpus)")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions(s"local[$cpus]", shufflePartitions)
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup on the smallest SF so headline timings measure

@@ -39,38 +39,12 @@ import org.apache.spark.sql.functions._
   */
 object Main {
 
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // builder extensions are silently IGNORED when getOrCreate returns a
-    // pre-existing session (shared-JVM callers, tests) — ensure the
-    // interval-join rewrite either way, so a raw SQL overlap join from
-    // this session never plans nested-loop. Safe to stack with the
-    // injected rule: the rewrite is idempotent (its own dedup predicate
-    // fails the equis-only guard on an already-rewritten join).
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[graft.plans.IntervalJoinRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.IntervalJoinRewrite()
-    // BandJoinRewrite additionally WANTS the extraOptimizations slot (the
-    // last optimizer batch): an EXISTS-spelled band becomes a LeftSemi
-    // join only at RewriteSubquery, AFTER the injected operator batch —
-    // only a late copy of the rule sees it. Idempotent (the __lband
-    // reference guard), so stacking with the injected copy is safe.
-    if (!s.experimental.extraOptimizations.exists(
-        _.isInstanceOf[graft.plans.BandJoinRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.BandJoinRewrite()
-    s
-  }
+  /** The CLI's session: [[graft.util.Sessions]] on `SPARK_MASTER`
+    * (default `local[*]`), one shuffle partition per core. */
+  def session(): SparkSession = graft.util.Sessions(
+    sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors))
 
   private def loadReads(spark: SparkSession, path: String,
       reference: Option[String] = None): Dataset[Read] = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot scalar kernels (SURVEY.md
@@ -325,33 +325,6 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
     copy(left = newLeft, right = newRight)
 }
 
-/** k7_scores(qual, mapq, copyNumber): all 2·(maxPloidy+1) likelihood
-  * cells for one observation as array<double> — a_ll_0..maxP then
-  * o_ll_0..maxP, zero-padded above the row's copy number. Calls the
-  * SAME Likelihood kernel the broadcast score table is generated from,
-  * so the inline path is bit-identical to the table by construction
-  * (Spark's SQL pow/log route through StrictMath and differ from the
-  * kernel's Math intrinsics by ULPs — the earlier pure-Column attempt
-  * failed exactly that way). One static call per row in whole-stage
-  * codegen; the Project's subexpression elimination shares it across
-  * the extracted columns.
-  */
-case class K7Scores(first: Expression, second: Expression, third: Expression, maxPloidy: Int)
-    extends TernaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(q: Any, mq: Any, m: Any): Any =
-    ArrayData.toArrayData(K7Scores.cells(
-      q.asInstanceOf[Number].intValue(), mq.asInstanceOf[Number].intValue(),
-      m.asInstanceOf[Number].intValue(), maxPloidy))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (q, mq, m) =>
-      s"org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(" +
-        s"graft.functions.K7Scores.cells((int)$q, (int)$mq, (int)$m, $maxPloidy))")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): K7Scores =
-    copy(first = f, second = s, third = t)
-}
-
 /** fisher_phred(a, b, c, d): two-sided Fisher's exact test on the 2x2
   * table [[a, b], [c, d]], phred-scaled — the strand-bias annotation
   * (K10). Calls the SAME LogMath kernel the former per-row UDF wrapped,
@@ -385,24 +358,7 @@ case class FisherPhred(a: Expression, b: Expression, c: Expression, d: Expressio
     copy(a = newFirst, b = newSecond, c = newThird, d = newFourth)
 }
 
-object K7Scores {
-  /** a_ll_0..maxP ++ o_ll_0..maxP for one (qual, mapq, copyNumber). */
-  def cells(q: Int, mq: Int, m: Int, maxP: Int): Array[Double] = {
-    val a = graft.kernels.Likelihood.alleleLogLikelihoods(q, mq, m)
-    val o = graft.kernels.Likelihood.otherLogLikelihoods(q, mq, m)
-    val out = new Array[Double](2 * (maxP + 1)) // zero-padded above m
-    System.arraycopy(a, 0, out, 0, a.length)
-    System.arraycopy(o, 0, out, maxP + 1, o.length)
-    out
-  }
-}
-
 object NativeExpressions {
-
-  def k7_scores(q: Column, mq: Column, m: Column, maxPloidy: Int): Column =
-    ColumnBridge.column(K7Scores(
-      ColumnBridge.expression(q), ColumnBridge.expression(mq),
-      ColumnBridge.expression(m), maxPloidy))
 
   def phred_to_error(c: Column): Column =
     ColumnBridge.column(PhredToError(ColumnBridge.expression(c)))

@@ -55,9 +55,13 @@ object SquareOff {
   /** Square off: every extracted variant × every sample with an
     * overlapping gVCF row. Exact allele matches win; otherwise the
     * overlapping block with the highest read depth represents the
-    * sample's reference model at the site.
+    * sample's reference model at the site. No-call rows (state -1: the
+    * `./.` cell a multi-sample VCF holds for a sample without a row at
+    * the site) carry no evidence and are ignored, so they never outrank
+    * the sample's reference block.
     */
   def squareOff(gts: DataFrame, binSize: Double = 1000.0): DataFrame = {
+    val called = gts.where(col("genotypeState") >= 0)
     val variants = extractVariants(gts).select(
       col("contigName").as("v_contig"), col("start").as("v_start"),
       col("end").as("v_end"), col("referenceAllele").as("v_ref"),
@@ -65,7 +69,7 @@ object SquareOff {
 
     val joined = IntervalJoin.overlap(
       variants, "v_start", "v_end",
-      gts, "start", "end",
+      called, "start", "end",
       binSize, keys = Seq("v_contig" -> "contigName"))
 
     // compare CANONICALIZED alleles on both sides: v_ref/v_alt come out

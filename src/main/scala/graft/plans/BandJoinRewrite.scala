@@ -58,7 +58,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * Integral value types only — the engine-wide exact-units convention
   * (cents, micro-nats); float bands are left to the user's own bucketing.
   *
-  * Register: SparkSession.builder().withExtensions(new GraftExtensions)
+  * Register: [[graft.util.Sessions]] (which adds GraftExtensions)
   * or spark.sql.extensions=graft.plans.GraftExtensions.
   */
 case class BandJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {

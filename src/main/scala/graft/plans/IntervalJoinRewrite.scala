@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * logical join — SQL included.
   *
   * Bin width: spark.graft.intervalJoin.binSize (default 1000).
-  * Register: SparkSession.builder().withExtensions(new GraftExtensions)
+  * Register: [[graft.util.Sessions]] (which adds GraftExtensions)
   * or spark.sql.extensions=graft.plans.GraftExtensions.
   */
 case class IntervalJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {

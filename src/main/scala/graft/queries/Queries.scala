@@ -195,7 +195,7 @@ object Queries {
     // the buffer 10 digits, and past 18 digits a decimal stops being a
     // mutable fixed-width agg field — every per-row update then
     // ser/des a BigDecimal and the hash agg leaves its fast path
-    // (A3Probe, sf100 solo: decimal 30.2 s vs an identical-shape
+    // (sf100 solo: decimal 30.2 s vs an identical-shape
     // double twin 4.4 s). The inputs are 2-decimal money values, so
     // the SAME exact sums are long sums of scaled integers — cents,
     // x100 more per discount/tax factor — reconstructed into decimals
@@ -850,14 +850,6 @@ object Queries {
     * rendered as real strings so the kernel pipeline parses them for
     * real. The closed form is mirrored by the DuckDB oracles.
     */
-  /** Profiling hook (tools/Profile): the g2 read set. */
-  def profileReads(spark: SparkSession, dir: String): Dataset[Read] =
-    syntheticReads(spark, dir)
-
-  /** Profiling hook (tools/G6Profile): the g4/g6 cohort read set. */
-  def cohortReadsForProfile(spark: SparkSession, dir: String): Dataset[Read] =
-    cohortReads(spark, dir)
-
   private def syntheticReads(spark: SparkSession, dir: String): Dataset[Read] = {
     val spark2 = spark
     import spark2.implicits._
@@ -955,13 +947,11 @@ object Queries {
     * behavior on every retained read is fully checked by the hash.
     */
   def g3_realign(spark: SparkSession, dir: String): DataFrame =
-    graft.genomics.Realigner.realign(sloppyReadsForProfile(spark, dir), k = 6)
+    graft.genomics.Realigner.realign(sloppyReads(spark, dir), k = 6)
       .select("readName", "contigName", "start", "cigar", "mdTag")
 
-  /** The g3 synthetic sloppy-read set, exposed for stage-level profiling
-    * (G3Profile) — construction cost vs realignment-kernel cost.
-    */
-  private[graft] def sloppyReadsForProfile(spark: SparkSession, dir: String): Dataset[Read] = {
+  /** The g3 synthetic sloppy-read set. */
+  private def sloppyReads(spark: SparkSession, dir: String): Dataset[Read] = {
     val spark2 = spark
     import spark2.implicits._
     t(spark, dir, "lineitem")
@@ -1016,7 +1006,7 @@ object Queries {
   /** The g4/g6 synthetic cohort: same reads as g1/g2, sample derived
     * from l_linestatus.
     */
-  private def cohortReads(spark: SparkSession, dir: String): Dataset[Read] = {
+  private[graft] def cohortReads(spark: SparkSession, dir: String): Dataset[Read] = {
     val spark2 = spark
     import spark2.implicits._
     val snvOff = (col("l_suppkey") % 10).cast("int")

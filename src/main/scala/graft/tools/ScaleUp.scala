@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-step generator (dev tool, not part of the driver contract):
@@ -213,12 +213,7 @@ object ScaleUp {
     val in = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Sessions("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
     val li = spark.read.parquet(s"$in/lineitem.parquet")
     val ords = spark.read.parquet(s"$in/orders.parquet")

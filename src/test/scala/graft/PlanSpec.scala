@@ -75,7 +75,7 @@ class PlanSpec extends SparkSpec {
   test("gVCF pipeline: anti-join broadcasts, no nested loop, partial aggs") {
     // g6 checkpoints the called cohort before the square-off self-join,
     // so inspect the cohort CONSTRUCTION plan (where the genotyper lives)
-    val rds = Queries.cohortReadsForProfile(spark, sf("0.001"))
+    val rds = Queries.cohortReads(spark, sf("0.001"))
     val vs = graft.genomics.DiscoverVariants.discoverPerSample(rds, 20, 2)
       .select("sampleId", "contigName", "start", "referenceAllele", "alternateAllele")
     val plan = planOf(graft.genomics.BiallelicGenotyper.callPerSample(

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** gVCF model end-to-end: the reference's multiallelic fixture
   * (gvcf_multiallelic.g.vcf, assertions mirrored from its
   * SquareOffReferenceModelSuite), scoreAllSites reference-block
-  * emission, block merging, and square-off over the engine's own gVCF.
+  * emission, and square-off over the engine's own gVCF and its VCF
+  * round trip.
   */
 class GvcfSpec extends SparkSpec {
 
@@ -75,33 +76,6 @@ class GvcfSpec extends SparkSpec {
     assert(dup.count() === 0)
   }
 
-  test("block merge compresses hom-ref runs and respects GQ bands") {
-    import spark.implicits._
-    val reads = Sam.read(spark, s"$res/NA12878_snp_A2G_chr20_225058.sam", "NA12878")
-      .filter(_.mapq > 0)
-    val variants = DiscoverVariants.discover(reads, minPhred = 20, minObservations = 2)
-      .select("contigName", "start", "referenceAllele", "alternateAllele")
-      .as[DiscoveredVariant]
-    val gvcf = BiallelicGenotyper.call(reads, variants, ploidy = 2,
-      binSize = 512.0, scoreAllSites = true)
-    val perPos = gvcf.where(col("alternateAllele").isNull)
-    val merged = ReferenceBlocks.merge(gvcf, gqBandWidth = 10)
-    val blocks = merged.where(col("alternateAllele").isNull)
-    val nBlocks = blocks.count()
-    assert(nBlocks > 0 && nBlocks < perPos.count(), "merging must compress")
-    // envelope: every block's gq is the min over its span; spans do not
-    // overlap and each block's [start,end) covers >= 1 position
-    val bad = blocks.where(col("end") <= col("start")).count()
-    assert(bad === 0)
-    // conservative: block min depth <= any per-position depth within it
-    val joined = blocks.alias("b").join(perPos.alias("p"),
-      col("b.sampleId") === col("p.sampleId") &&
-        col("b.contigName") === col("p.contigName") &&
-        col("p.start") >= col("b.start") && col("p.start") < col("b.end"))
-    val viol = joined.where(col("b.readDepth") > col("p.readDepth")).count()
-    assert(viol === 0)
-  }
-
   test("gVCF round trip through the VCF sink preserves block spans") {
     import spark.implicits._
     val gvcf = Seq(
@@ -143,15 +117,22 @@ class GvcfSpec extends SparkSpec {
       spark.emptyDataset[DiscoveredVariant], ploidy = 2, binSize = 512.0,
       scoreAllSites = true)
     val cohort = g1.unionByName(g2)
-    val squared = SquareOff.squareOff(cohort, binSize = 512.0)
-    val rows = squared.where(col("start") === 104L)
-      .select("sampleId", "genotypeState", "exactCall")
-      .as[(String, Int, Boolean)].collect()
-    val s1Row = rows.find(_._1 == "s1").get
-    val s2Row = rows.find(_._1 == "s2").get
-    assert(s1Row._3 === true)
-    assert(s1Row._2 >= 1, "s1 carries the alt")
-    assert(s2Row._3 === false, "s2 squares off from its reference block")
-    assert(s2Row._2 === 0)
+    // the same cohort through the VCF sink: the multi-sample file holds
+    // a ./. cell (state -1) for s2 at s1's variant record, which must not
+    // outrank s2's reference block
+    val dir = java.nio.file.Files.createTempDirectory("gvcfsq").toString + "/out"
+    Vcf.write(cohort, dir, singleFile = true)
+    for ((input, label) <- Seq(cohort -> "engine gVCF", Vcf.read(spark, dir) -> "VCF gVCF")) {
+      val squared = SquareOff.squareOff(input, binSize = 512.0)
+      val rows = squared.where(col("start") === 104L)
+        .select("sampleId", "genotypeState", "exactCall")
+        .as[(String, Int, Boolean)].collect()
+      val s1Row = rows.find(_._1 == "s1").get
+      val s2Row = rows.find(_._1 == "s2").get
+      assert(s1Row._3 === true, label)
+      assert(s1Row._2 >= 1, s"$label: s1 carries the alt")
+      assert(s2Row._3 === false, s"$label: s2 squares off from its reference block")
+      assert(s2Row._2 === 0, label)
+    }
   }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Registered via experimental.extraOptimizations rather than a fresh
   * `withExtensions` session: under `sbt test` a shared session already
   * exists and getOrCreate would silently ignore builder extensions.
-  * (Production registration is `withExtensions(new GraftExtensions)` or
+  * (Production registration is [[graft.util.Sessions]] or
   * spark.sql.extensions=graft.plans.GraftExtensions.)
   */
 class IntervalJoinRewriteSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
